@@ -12,6 +12,8 @@ between MinHash and HyperLogLog") as an idiomatic Spark pipeline:
 - ``sources``     — deterministic synthetic corpus generator + table loaders
 - ``plans``       — end-to-end resumable pipelines with checkpoint/lineage
 - ``streaming``   — Structured Streaming variants
+- ``worker_zipimport`` — lazy zipimport invalidation in PySpark workers,
+                    installed by importing this package
 
 Design note: this is NOT a port of the reference C++ (see SURVEY.md). The
 reference's per-element streaming inserts become per-row vectorized bulk
@@ -20,3 +22,7 @@ element-wise min/max merges map to algebraic partial+final aggregation.
 """
 
 __version__ = "0.1.0"
+
+from . import worker_zipimport as _worker_zipimport
+
+_worker_zipimport.install()

@@ -4,6 +4,16 @@ local[N] in this sandbox stands in for an N-executor cluster; every setting
 here is one we would also set (with larger numbers) via spark-submit on a
 real cluster: AQE for runtime re-planning and skew-join splitting, Arrow for
 the pandas-UDF boundary, and shuffle partitions sized to the parallelism.
+
+Python workers: every PySpark task starts with
+``importlib.invalidate_caches()``, and on CPython 3.10-3.12 that made each of
+a worker's 16 zip importers (``pyspark.zip``, the spark-core jar, py4j)
+re-read its archive directory, 80-170 ms per task before any UDF ran.  No
+session setting avoids it; the fix is in
+``set_sketch_paper_spark/worker_zipimport.py``, which the package installs on
+import inside worker processes only.  It backports CPython 3.13's lazy
+invalidation (one re-read per archive, on the next lookup), so shipped
+``addPyFile`` contents still import, and it retires itself on Python 3.13+.
 """
 
 from __future__ import annotations
