@@ -312,6 +312,12 @@ def kmv_distinct(
     from ..operators.signatures import widen_if_narrow
 
     keys = [keys] if isinstance(keys, str) else list(keys)
+    reserved = {"__v", "__h"} & set(keys)
+    if reserved:
+        raise ValueError(
+            f"kmv_distinct: key columns {sorted(reserved)} clash with the "
+            "reserved internal columns __v and __h; rename them first"
+        )
     # Project to (keys, value) FIRST, then widen, then hash: widening the
     # RAW frame was tried and reverted in r6 (the repartition carried every
     # event column — 2.6-3.0s unwidened vs 3.5-8.0s widened at sf1.0), but

@@ -84,6 +84,15 @@ def test_kmv_distinct_keeps_null_key_group(spark):
     assert out["a"] == bottom_k(range(20), 8)
 
 
+@pytest.mark.parametrize("key", ["__v", "__h"])
+def test_kmv_distinct_rejects_reserved_key_names(spark, key):
+    """A key named like an internal alias would make the projection
+    ambiguous (AMBIGUOUS_REFERENCE); it is refused up front instead."""
+    df = spark.createDataFrame([(1, 2)], schema=f"{key} int, x int")
+    with pytest.raises(ValueError, match="__v and __h"):
+        kmv_distinct(df, [key], "x")
+
+
 def test_kmv_from_array_drops_null_elements(spark):
     """ADVICE r5: NULL is not a set element — kmv_from_array must match the
     DuckDB twin's list_distinct behavior (which removes NULLs) instead of
